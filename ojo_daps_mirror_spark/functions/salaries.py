@@ -20,7 +20,7 @@ the same constants so the two can never drift apart.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 from .rounding import EPS, round_eps
 from pyspark.sql import functions as F
@@ -42,10 +42,6 @@ MAX_SALARY = 500_000.0
 # value → raw salary, props.k → the min/max spread).
 RATE_FOR_EVENT = {"click": "HOUR", "view": "DAY", "purchase": "YEAR", "signup": "YEAR"}
 SCALE_FOR_RATE = {"HOUR": 1.0, "DAY": 3.0, "YEAR": 300.0}
-
-
-def rate_col() -> Column:
-    return F.expr(_spark_rate_sql())
 
 
 def _spark_rate_sql() -> str:

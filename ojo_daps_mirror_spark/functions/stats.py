@@ -9,6 +9,8 @@ the identical arithmetic, so 6-dp rounded p-values can't drift.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -178,3 +180,34 @@ def sql_normal_cdf(z: str) -> str:
         f" * {sql_erf_pos(f'ABS({z}) / {_SQRT2!r}')})"
     )
     return f"(0.5 * (1.0 + {signed}))"
+
+
+# Poisson(1) bootstrap weights from a deterministic md5 uniform: the
+# inverse-CDF thresholds P(X<=k) for k = 0..3 (literal spec — identical
+# digits in both engines); k = 4 caps the tail.
+_POIS = (
+    0.36787944117144233,
+    0.7357588823428847,
+    0.9196986029286058,
+    0.9810118431238462,
+)
+# The thresholds as 8-hex-char string literals: an 8-hex lowercase
+# substring compares LEXICOGRAPHICALLY exactly like its 32-bit integer
+# value, so u < p becomes one string compare — no radix conversion, no
+# division, no double compare, in either engine.
+_POIS_HEX = tuple(format(math.ceil(p * (1 << 32)), "08x") for p in _POIS)
+
+
+def poisson_weight(sub: Column) -> Column:
+    """Poisson(1) weight (0..4) of an 8-hex-char uniform ``sub``."""
+    w = F.when(sub < _POIS_HEX[0], 0)
+    for k, h in enumerate(_POIS_HEX[1:], 1):
+        w = w.when(sub < h, k)
+    return w.otherwise(len(_POIS_HEX))
+
+
+def sql_poisson_weight(sub: str) -> str:
+    whens = " ".join(
+        f"WHEN {sub} < '{h}' THEN {k}" for k, h in enumerate(_POIS_HEX)
+    )
+    return f"CASE {whens} ELSE {len(_POIS_HEX)} END"

@@ -90,22 +90,13 @@ def spark_sql_tokens(text: str) -> str:
     return f"split({text}, '\\\\s+')"
 
 
-def _spark_shingle_chain(toks: str, k: int) -> str:
+def spark_sql_shingles(toks: str, k: int = 3) -> str:
+    """Spark twin of ``shingles`` (distinct k-word shingles)."""
     cur = toks
     for off in range(1, k):
         shifted = f"slice({toks}, {off + 1}, greatest(size({toks}) - {off}, 0))"
         cur = f"zip_with({cur}, {shifted}, (a, b) -> concat_ws(' ', a, b))"
-    return f"slice({cur}, 1, greatest(size({toks}) - {k - 1}, 0))"
-
-
-def spark_sql_shingles(toks: str, k: int = 3) -> str:
-    """Spark twin of ``shingles`` (distinct k-word shingles)."""
-    return f"array_distinct({_spark_shingle_chain(toks, k)})"
-
-
-def spark_sql_raw_shingles(toks: str, k: int = 3) -> str:
-    """Spark twin of ``raw_shingles`` (positional, no distinct)."""
-    return _spark_shingle_chain(toks, k)
+    return f"array_distinct(slice({cur}, 1, greatest(size({toks}) - {k - 1}, 0)))"
 
 
 def spark_sql_hash64(s: str) -> str:

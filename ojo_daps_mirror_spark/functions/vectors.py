@@ -37,12 +37,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_normalize(a: Column) -> Column:
-    """v / ||v|| — normalise once upstream so joins only need dot()."""
-    n = norm(a)
-    return F.transform(as_double(a), lambda x: x / n)
-
-
 # DuckDB twins (operate on a list column cast to DOUBLE[]).
 def sql_dot(a: str, b: str) -> str:
     return f"list_dot_product(({a})::DOUBLE[], ({b})::DOUBLE[])"

@@ -8,6 +8,8 @@ same rounding — over the same parquet tables.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 from typing import Optional
 
@@ -32,163 +34,8 @@ def register(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], Que
 
 
 def load_all() -> None:
-    """Import every plan module so registration side effects run."""
-    from . import (  # noqa: F401
-        community_plans,
-        dedup_plans,
-        enrich_plans,
-        extract_plans,
-        features_plans,
-        graph_plans,
-        jobs_observatory,
-        llm_plans,
-        llm_plans2,
-        llm_plans3,
-        llm_plans4,
-        llm_plans5,
-        llm_plans6,
-        llm_plans7,
-        llm_plans8,
-        llm_plans9,
-        llm_plans10,
-        llm_plans11,
-        llm_plans12,
-        llm_plans13,
-        llm_plans14,
-        llm_plans15,
-        llm_plans16,
-        llm_plans17,
-        llm_plans18,
-        llm_plans19,
-        llm_plans20,
-        llm_plans21,
-        llm_plans22,
-        llm_plans23,
-        llm_plans24,
-        llm_plans25,
-        llm_plans26,
-        llm_plans27,
-        llm_plans28,
-        llm_plans29,
-        llm_plans30,
-        llm_plans31,
-        llm_plans32,
-        llm_plans33,
-        llm_plans34,
-        llm_plans35,
-        llm_plans36,
-        llm_plans37,
-        llm_plans38,
-        llm_plans39,
-        llm_plans40,
-        llm_plans41,
-        llm_plans42,
-        llm_plans43,
-        llm_plans44,
-        llm_plans45,
-        llm_plans46,
-        llm_plans47,
-        llm_plans48,
-        llm_plans49,
-        llm_plans50,
-        llm_plans51,
-        llm_plans52,
-        llm_plans53,
-        llm_plans54,
-        llm_plans55,
-        llm_plans56,
-        llm_plans57,
-        llm_plans58,
-        llm_plans59,
-        llm_plans60,
-        llm_plans61,
-        llm_plans62,
-        llm_plans63,
-        llm_plans64,
-        llm_plans65,
-        llm_plans66,
-        llm_plans67,
-        llm_plans68,
-        llm_plans69,
-        llm_plans70,
-        llm_plans71,
-        llm_plans72,
-        llm_plans73,
-        llm_plans74,
-        llm_plans75,
-        llm_plans76,
-        llm_plans77,
-        llm_plans78,
-        llm_plans79,
-        llm_plans80,
-        llm_plans81,
-        llm_plans82,
-        llm_plans83,
-        llm_plans84,
-        llm_plans85,
-        llm_plans86,
-        llm_plans87,
-        llm_plans88,
-        llm_plans89,
-        llm_plans90,
-        llm_plans91,
-        llm_plans92,
-        llm_plans93,
-        llm_plans94,
-        llm_plans95,
-        llm_plans96,
-        llm_plans97,
-        llm_plans98,
-        llm_plans99,
-        llm_plans100,
-        llm_plans101,
-        llm_plans102,
-        llm_plans103,
-        llm_plans104,
-        llm_plans105,
-        llm_plans106,
-        llm_plans107,
-        llm_plans108,
-        llm_plans109,
-        llm_plans110,
-        llm_plans111,
-        llm_plans112,
-        llm_plans113,
-        llm_plans114,
-        llm_plans115,
-        llm_plans116,
-        llm_plans117,
-        llm_plans118,
-        llm_plans119,
-        llm_plans120,
-        llm_plans121,
-        llm_plans122,
-        llm_plans123,
-        llm_plans124,
-        llm_plans125,
-        llm_plans126,
-        llm_plans127,
-        llm_plans128,
-        llm_plans129,
-        llm_plans130,
-        llm_plans131,
-        llm_plans132,
-        llm_plans133,
-        llm_plans134,
-        llm_plans135,
-        llm_plans136,
-        llm_plans137,
-        llm_plans138,
-        llm_plans139,
-        misc_plans,
-        parity_plans,
-        olap,
-        olap_breadth,
-        olap_breadth2,
-        olap_breadth3,
-        olap_breadth4,
-        olap_breadth5,
-        olap_breadth6,
-        text_plans,
-        vector_plans,
-    )
+    """Import every plan module in this package so registration side
+    effects run. Every registered name is unique, so import order does
+    not decide which builder wins."""
+    for mod in pkgutil.iter_modules(__path__):
+        importlib.import_module(f"{__name__}.{mod.name}")

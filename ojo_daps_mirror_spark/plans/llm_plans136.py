@@ -14,8 +14,6 @@ histogram actually separates, instead of the hand-picked constant).
 
 from __future__ import annotations
 
-import math as _math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -24,8 +22,10 @@ from ..functions.rounding import round_eps, sql_round
 from ..functions.stats import (
     normal_cdf,
     normal_ppf,
+    poisson_weight,
     sql_normal_cdf,
     sql_normal_ppf,
+    sql_poisson_weight,
 )
 from ..operators.attach import attach_scalars
 from ..sources import load_table
@@ -35,30 +35,14 @@ from . import register
 
 BCA_B = 32
 BCA_GROUPS = 8
-_POIS = (
-    0.36787944117144233,
-    0.7357588823428847,
-    0.9196986029286058,
-    0.9810118431238462,
-)
-_POIS_HEX = tuple(format(_math.ceil(p * (1 << 32)), "08x") for p in _POIS)
 BCA_Z = 1.959964  # two-sided 95%
-
-
-def _sql_pois_w(sub: str) -> str:
-    return (
-        f"CASE WHEN {sub} < '{_POIS_HEX[0]}' THEN 0 "
-        f"WHEN {sub} < '{_POIS_HEX[1]}' THEN 1 "
-        f"WHEN {sub} < '{_POIS_HEX[2]}' THEN 2 "
-        f"WHEN {sub} < '{_POIS_HEX[3]}' THEN 3 ELSE 4 END"
-    )
 
 
 _B252_ORACLE = f"""
 WITH expanded AS (
   SELECT g.g * 4 + j.j AS b,
          CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS cents,
-         {_sql_pois_w(
+         {sql_poisson_weight(
              "substr(md5(o.o_orderkey::VARCHAR || '|' || g.g::VARCHAR),"
              " j.j * 8 + 1, 8)")} AS w
   FROM orders o,
@@ -186,13 +170,7 @@ def bca_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("digest"),
     )
     sub = F.substring("digest", F.col("j") * 8 + 1, 8)
-    w = (
-        F.when(sub < _POIS_HEX[0], 0)
-        .when(sub < _POIS_HEX[1], 1)
-        .when(sub < _POIS_HEX[2], 2)
-        .when(sub < _POIS_HEX[3], 3)
-        .otherwise(4)
-    )
+    w = poisson_weight(sub)
     expanded = digests.select(
         "cents",
         "g",

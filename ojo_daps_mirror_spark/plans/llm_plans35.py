@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rounding import round_eps, sql_round
+from ..functions.stats import poisson_weight, sql_poisson_weight
 from ..functions.text import hash64, sql_hash64
 from ..operators.snapshot import monday_of
 from ..sources import load_table
@@ -334,38 +335,14 @@ def fellegi_sunter_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- B68
 
 BOOT_B = 32  # replicates
-# Poisson(1) inverse-CDF thresholds (literal spec — identical digits
-# in both engines): P(X<=k) for k = 0..3; k = 4 caps the tail.
-_POIS = (
-    0.36787944117144233,
-    0.7357588823428847,
-    0.9196986029286058,
-    0.9810118431238462,
-)
 BOOT_GROUPS = 8  # md5 digests per row; each 32-hex digest yields 4 uniforms
-# Poisson thresholds as 8-hex-char string literals: an 8-hex lowercase
-# substring compares LEXICOGRAPHICALLY exactly like its 32-bit integer
-# value, so u < p becomes one string compare — no radix conversion, no
-# division, no double compare, in either engine.
-import math as _math
-
-_POIS_HEX = tuple(format(_math.ceil(p * (1 << 32)), "08x") for p in _POIS)
-
-
-def _sql_pois_w(sub: str) -> str:
-    return (
-        f"CASE WHEN {sub} < '{_POIS_HEX[0]}' THEN 0 "
-        f"WHEN {sub} < '{_POIS_HEX[1]}' THEN 1 "
-        f"WHEN {sub} < '{_POIS_HEX[2]}' THEN 2 "
-        f"WHEN {sub} < '{_POIS_HEX[3]}' THEN 3 ELSE 4 END"
-    )
 
 
 _B68_ORACLE = f"""
 WITH expanded AS (
   SELECT g.g * 4 + j.j AS b,
          CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS cents,
-         {_sql_pois_w(
+         {sql_poisson_weight(
              "substr(md5(o.o_orderkey::VARCHAR || '|' || g.g::VARCHAR),"
              " j.j * 8 + 1, 8)")} AS w
   FROM orders o,
@@ -431,13 +408,7 @@ def bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("digest"),
     )
     sub = F.substring("digest", F.col("j") * 8 + 1, 8)
-    w = (
-        F.when(sub < _POIS_HEX[0], 0)
-        .when(sub < _POIS_HEX[1], 1)
-        .when(sub < _POIS_HEX[2], 2)
-        .when(sub < _POIS_HEX[3], 3)
-        .otherwise(4)
-    )
+    w = poisson_weight(sub)
     expanded = digests.select(
         "cents",
         "g",

@@ -16,13 +16,9 @@ def spark():
     yield spark
     # Reap the materialized stage dirs this session wrote (ADVICE r4:
     # clear_cache must be wired into session teardown).
-    from ojo_daps_mirror_spark.operators.stagecache import (
-        clear_cache as clear_stagecache,
-    )
-    from ojo_daps_mirror_spark.operators.suffix import clear_cache
+    from ojo_daps_mirror_spark.operators.stagecache import clear_cache
 
     clear_cache(spark)
-    clear_stagecache(spark)
 
 
 @pytest.fixture(scope="session")

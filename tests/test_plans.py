@@ -8,6 +8,13 @@ from ojo_daps_mirror_spark import plans
 plans.load_all()
 
 
+def test_load_all_registers_every_key():
+    """load_all discovers the plan modules itself; a module that is
+    skipped or fails to register shows up as a drop in these counts."""
+    assert len(plans.QUERIES) == 527
+    assert len(plans.ORACLES) == 517
+
+
 def _plan(spark, sf_dir, key, mode="formatted", aqe=True):
     import contextlib
     import io

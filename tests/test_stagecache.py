@@ -1,7 +1,6 @@
-"""Contract of the generic multi-part stage cache
-(operators/stagecache.py) and its consensus-family instantiation.
-
-Mirrors tests/test_suffix_gc.py — the hardening is shared by design:
+"""Contract of the multi-part stage cache (operators/stagecache.py)
+and its consensus-family instantiation. The suffix stage
+(operators/suffix.py) is a single-part stage on the same code path:
 
 - per-app tempdir layout: orphaned ``ojo_stage_*`` dirs reaped by
   mtime TTL, liveness judged by the freshest mtime of dir-or-child.
@@ -123,6 +122,8 @@ def test_shared_dir_reaps_stale_tmp_keeps_fresh(spark, tmp_path, monkeypatch):
     assert not os.path.exists(stale_tmp), "stale __tmp_ debris must be reaped"
     assert os.path.exists(fresh_tmp), "fresh __tmp_ dir must survive"
     assert os.path.exists(os.path.join(path, "_STAGE_OK"))
+    # shared-dir stages are the operator's to GC — never in _DIRS
+    assert os.path.dirname(path) not in stagecache._DIRS
 
 
 def test_heartbeat_refreshes_stage_and_parent(spark, tmp_path, monkeypatch):

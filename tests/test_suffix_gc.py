@@ -1,16 +1,9 @@
-"""GC contract of the suffix-stage cache (operators/suffix.py).
+"""Contract of the suffix-sort stage (operators/suffix.py).
 
-Two storage layouts, two different owners:
-
-- per-app tempdir layout (default): ``_sweep_stale`` reaps orphaned
-  ``ojo_suffix_*`` dirs by mtime TTL. Liveness must consider the
-  FRESHEST mtime of the dir or any direct child — the in-process
-  heartbeat utimes the stage subdir, and a parent-only check would
-  reap a live long-running session's stage (ADVICE r6, medium).
-- shared-dir layout (``SPARK_GRAFT_SUFFIX_CACHE_DIR``): stages are
-  published by atomic rename and reused read-if-exists; crashed
-  writers leave ``*.__tmp_<app>`` debris that the NEXT writer reaps
-  iff older than the stale TTL (VERDICT r6 next-round #7).
+Storage, GC and publish behaviour belong to operators/stagecache.py and
+are tested in tests/test_stagecache.py. This file pins what is specific
+to the suffix stage: its key tracks the input documents, and its
+``nlcp`` column is the sort-successor's ``lcp``.
 """
 
 from __future__ import annotations
@@ -18,100 +11,33 @@ from __future__ import annotations
 import os
 import time
 
+import pandas as pd
+
 from ojo_daps_mirror_spark.operators import suffix
 
 
-def _age(path: str, secs: float) -> None:
-    t = time.time() - secs
-    os.utime(path, (t, t))
+def test_stage_tracks_overwritten_documents(spark, sf_dir, tmp_path):
+    """Overwriting documents.parquet within one application must key a
+    fresh build: the second call's rows equal a fresh build's."""
+    src = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))
+    live = tmp_path / "live"
+    live.mkdir()
+    docs = live / "documents.parquet"
+    src.head(5).to_parquet(docs, index=False)
+    small = suffix.adjacent_suffixes(spark, str(live), cap=8).count()
 
+    src.head(20).to_parquet(docs, index=False)
+    t = time.time() + 5
+    os.utime(docs, (t, t))
+    again = suffix.adjacent_suffixes(spark, str(live), cap=8).count()
 
-def test_sweep_spares_dir_with_fresh_child(tmp_path, monkeypatch):
-    import tempfile
+    fresh_dir = tmp_path / "fresh"
+    fresh_dir.mkdir()
+    src.head(20).to_parquet(fresh_dir / "documents.parquet", index=False)
+    fresh = suffix.adjacent_suffixes(spark, str(fresh_dir), cap=8).count()
 
-    root = tmp_path / "tmproot"
-    root.mkdir()
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(root))
-
-    old = suffix._STALE_TTL_SECS + 3600
-
-    # dead app: base dir AND stage child both past the TTL -> reaped
-    dead = root / "ojo_suffix_deadapp"
-    (dead / "cap8_s1_v2_x").mkdir(parents=True)
-    _age(str(dead / "cap8_s1_v2_x"), old)
-    _age(str(dead), old)
-
-    # live app: base dir mtime is stale (nothing recreated a child in
-    # 48h) but the heartbeat kept the stage subdir fresh -> survives
-    live = root / "ojo_suffix_liveapp"
-    (live / "cap8_s1_v2_y").mkdir(parents=True)
-    _age(str(live), old)  # child stays fresh
-
-    monkeypatch.setattr(suffix, "_swept", False)
-    monkeypatch.setattr(suffix, "_DIRS", set())
-    suffix._sweep_stale()
-
-    assert not dead.exists(), "stale dir with stale children must be reaped"
-    assert live.exists(), "fresh child heartbeat must keep the dir alive"
-
-
-def test_heartbeat_refreshes_parent_dir(spark, sf_dir, monkeypatch):
-    """The cache-hit heartbeat must refresh the per-app BASE dir the
-    sweep reaps by, not only the stage subdir (ADVICE r6)."""
-    df = suffix.adjacent_suffixes(spark, sf_dir, cap=8)
-    assert df.count() > 0
-    app = spark.sparkContext.applicationId
-    stage = suffix._stage_path(app, sf_dir, 8, 1)
-    base = os.path.dirname(stage)
-    assert os.path.basename(base).startswith("ojo_suffix_")
-    _age(base, suffix._STALE_TTL_SECS + 3600)
-    _age(stage, suffix._STALE_TTL_SECS + 3600)
-    suffix.adjacent_suffixes(spark, sf_dir, cap=8)  # cache hit -> heartbeat
-    now = time.time()
-    assert now - os.path.getmtime(stage) < 600
-    assert now - os.path.getmtime(base) < 600
-
-
-def test_shared_dir_reaps_stale_tmp_and_reuses_published(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    shared = tmp_path / "lake"
-    shared.mkdir()
-    monkeypatch.setenv("SPARK_GRAFT_SUFFIX_CACHE_DIR", str(shared))
-    # a fresh key tuple (unique cap) so the in-process cache misses
-    cap = 9
-    app = spark.sparkContext.applicationId
-    path = suffix._stage_path(app, sf_dir, cap, 1)
-
-    # crashed-writer debris: one stale (reap), one fresh (keep — its
-    # writer may still be alive between tmp write and rename)
-    stale_tmp = f"{path}.__tmp_deadapp"
-    fresh_tmp = f"{path}.__tmp_otherapp"
-    os.makedirs(stale_tmp)
-    os.makedirs(fresh_tmp)
-    _age(stale_tmp, suffix._STALE_TTL_SECS + 3600)
-
-    df = suffix.adjacent_suffixes(spark, sf_dir, cap=cap)
-    n = df.count()
-    assert n > 0
-    assert not os.path.exists(stale_tmp), "stale __tmp_ debris must be reaped"
-    assert os.path.exists(fresh_tmp), "fresh __tmp_ dir must survive"
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-
-    # read-if-exists: a second build of the same key from a fresh
-    # process must NOT rewrite the published stage
-    published_mtime = os.path.getmtime(os.path.join(path, "_SUCCESS"))
-    key = (app, sf_dir, cap, 1)
-    suffix._CACHE.pop(key).unpersist()  # simulate a new process
-    df2 = suffix.adjacent_suffixes(spark, sf_dir, cap=cap)
-    assert df2.count() == n
-    assert (
-        os.path.getmtime(os.path.join(path, "_SUCCESS")) == published_mtime
-    ), "published stage must be reused read-if-exists, not rewritten"
-
-    # shared-dir stages are the operator's to GC — never in _DIRS
-    assert path not in suffix._DIRS
-    suffix._CACHE.pop(key).unpersist()
+    assert fresh > small
+    assert again == fresh, "stage built on the old documents was served"
 
 
 def test_stage_nlcp_is_successor_lcp(spark, sf_dir):
